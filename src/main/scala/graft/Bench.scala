@@ -13,22 +13,15 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    val spark = GraftSession(32)
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions")
 
-    def runOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def runOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : Either[Throwable, Double] = {
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => return -1.0 }
-      (System.nanoTime() - t0) / 1e9
+      catch { case e: Throwable => return Left(e) }
+      Right((System.nanoTime() - t0) / 1e9)
     }
 
     // warmup: run the flagship shape once to load classes + codegen paths
@@ -197,12 +190,22 @@ object Bench {
       .filter { case (name, _) => only.isEmpty || only(name) }
     val ordered = early.flatMap(n => base.find(_._1 == n)) ++
       base.filterNot { case (name, _) => early.contains(name) }
+    // every query with a timed run that threw: name -> (exception class of
+    // its first failure, failed runs). A query none of whose runs succeed
+    // has median -1 and is left out of `total`; this map says which and why.
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, (String, Int)]
     def measure(name: String,
                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, Seq[Double]) = {
       System.gc() // once per query: plain-heap garbage from the prior query
-      def timed(): Double = { val r = runOne(fn); drainBlocks(); r }
-      val ts = Seq(timed(), timed(), timed()).filter(_ >= 0).sorted
+      def timed() = { val r = runOne(fn); drainBlocks(); r }
+      val rs = Seq(timed(), timed(), timed())
+      val errs = rs.collect { case Left(e) => e.getClass.getName }
+      if (errs.nonEmpty) {
+        val (cls, k) = failed.getOrElse(name, (errs.head, 0))
+        failed(name) = (cls, k + errs.size)
+      }
+      val ts = rs.collect { case Right(t) => t }.sorted
       // true median: for an even count (one transient failure -> 2 runs),
       // average the two middle elements — ts(size/2) would pick the MAX of
       // two successes, reporting exactly the noise the median is meant to cut
@@ -286,11 +289,16 @@ object Bench {
         case c if c < 0x20 => f"\\u$c%04x"
         case c => c.toString
       }
+    val failedJson = failed.map { case (n, (cls, k)) =>
+      "\"" + n + "\":{\"error\":\"" + jstr(cls) + "\",\"failed_runs\":" + k + "}"
+    }.mkString("{", ",", "}")
     val provJson =
       s""""calib_ref":{"spark_par":$refSparkPar,"provenance":"${jstr(refProv)}","baseline":"${jstr(baselinePath)}"}"""
     val fullLine =
-      s"""{"metric":"total","value":${f"$total%.3f"},"value_calib_norm":${f"${calibNorm(total)}%.3f"},"unit":"sec","n_queries":${results.size},"calib":$calibJson,$provJson,"queries":$fullQs,"spread":$spread,"calib_q":$calibQ,"rerun":$rerunJson,"sf":"$sfDir"}"""
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
+      s"""{"metric":"total","value":${f"$total%.3f"},"value_calib_norm":${f"${calibNorm(total)}%.3f"},"unit":"sec","n_queries":${results.size},"calib":$calibJson,$provJson,"queries":$fullQs,"spread":$spread,"calib_q":$calibQ,"rerun":$rerunJson,"failed":$failedJson,"sf":"$sfDir"}"""
+    // one file per core count: a scaling run must not overwrite the full
+    // record of the default-width run
+    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"bench_out.c$cpus.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), fullLine + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] file write failed: ${e.getMessage}") }
 
@@ -305,7 +313,7 @@ object Bench {
       else omitted += 1
     }
     val line =
-      s"""{"metric":"total","value":${f"$total%.3f"},"value_calib_norm":${f"${calibNorm(total)}%.3f"},"unit":"sec","n_queries":${results.size},"calib":$calibJson,"n_rerun":${rerun.size},"queries":${kept.mkString("{", ",", "}")},"queries_omitted":$omitted,"full":"$outFile","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f"$total%.3f"},"value_calib_norm":${f"${calibNorm(total)}%.3f"},"unit":"sec","n_queries":${results.size},"calib":$calibJson,"n_rerun":${rerun.size},"n_failed":${failed.size},"queries":${kept.mkString("{", ",", "}")},"queries_omitted":$omitted,"full":"$outFile","sf":"$sfDir"}"""
     println(line)
     spark.stop()
   }

@@ -17,12 +17,13 @@ import org.apache.spark.sql.SparkSession
 object GraftCli {
   /** Per-tenant scheduler pool for this process, set by the leading
     * `--pool=<tenant>` flag. Pools only matter when several tenants share
-    * one long-lived session/cluster (the ConcurrencyProbe shape, 2.6–3.1×
-    * serial throughput): FAIR mode stops one tenant's heavyweight stage
-    * from starving another's, and each submitting thread tags its jobs
-    * with its own pool. For the one-shot CLI the flag flips the session
-    * to FAIR and tags all jobs — so the same binary drops into a shared
-    * SparkConnect/ThriftServer deployment with per-tenant fairness.
+    * one long-lived session/cluster (2.6–3.1× serial throughput measured
+    * by ConcurrencyProbe, historical (probe removed after 8bdcef0)): FAIR
+    * mode stops one tenant's heavyweight stage from starving another's,
+    * and each submitting thread tags its jobs with its own pool. For the
+    * one-shot CLI the flag flips the session to FAIR and tags all jobs —
+    * so the same binary drops into a shared SparkConnect/ThriftServer
+    * deployment with per-tenant fairness.
     */
   private var schedulerPool: Option[String] = None
 
@@ -36,21 +37,14 @@ object GraftCli {
   }
 
   def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val b = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    schedulerPool.foreach(_ => b.config("spark.scheduler.mode", "FAIR"))
-    val s = b.getOrCreate()
+    val s = GraftSession(8, { b =>
+      sys.env.get("SPARK_GRAFT_MASTER").foreach(b.master)
+      schedulerPool.foreach(_ => b.config("spark.scheduler.mode", "FAIR"))
+      b.appName("graft")
+    })
     // thread-local: jobs submitted by this (main) thread land in the pool
     schedulerPool.foreach(p =>
       s.sparkContext.setLocalProperty("spark.scheduler.pool", p))
-    s.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(s)
     s
   }
 

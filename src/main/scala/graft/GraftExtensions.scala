@@ -1,82 +1,91 @@
 package graft
 
 import graft.functions.{CsvColumnAt, CsvFieldCount, HyperplaneSig, MinHashSig, MisraGriesAgg, PairEncode, PqAdcDot, PqEncode, RollingHash, SimHash64, TokenCount, VecCosine, VecDot, WordShingles, XorFoldHash}
+import graft.functions.GraftFunctions.delimOf
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 
 /** Catalyst injection point: register the graft expressions on every session
   * via `--conf spark.sql.extensions=graft.GraftExtensions` — the idiomatic
   * cluster deployment (no driver-side register() call needed; executors and
   * Thrift/Connect sessions all see the functions). `GraftFunctions.register`
-  * remains the programmatic equivalent for embedded use.
+  * remains the programmatic equivalent for embedded use; both walk the one
+  * table in the companion object.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage,
-      "", "", "", "", "", "", "built-in")
+  import GraftExtensions._
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // whole-operator extension: the native as-of join physical strategy
-    ext.injectPlannerStrategy(_ => graft.plans.AsofStrategy)
-    // composed union+window as-of idiom -> AsofJoinPlan, for free
-    ext.injectOptimizerRule(_ => graft.plans.AsofRewrite)
-    // linear recursive CTE (UnionLoop) -> pointer doubling
-    ext.injectPlannerStrategy(_ => graft.plans.HierarchyDoublingStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.RecursionDoubling)
-    ext.injectFunction((FunctionIdentifier("csv_column_at"),
-      info("csv_column_at", "_FUNC_(line, idx[, delim]) - raw CSV-family field slice (reference dialect)"),
-      (exprs: Seq[Expression]) =>
-        if (exprs.size >= 3) CsvColumnAt(exprs(0), exprs(1),
-          graft.functions.GraftFunctions.delimOf(exprs(2), "csv_column_at"))
-        else CsvColumnAt(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("csv_field_count"),
-      info("csv_field_count", "_FUNC_(line[, delim]) - field count under the reference dialect"),
-      (exprs: Seq[Expression]) =>
-        if (exprs.size >= 2) CsvFieldCount(exprs.head,
-          graft.functions.GraftFunctions.delimOf(exprs(1), "csv_field_count"))
-        else CsvFieldCount(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("xor_fold_hash"),
-      info("xor_fold_hash", "_FUNC_(value, seed, n) - reference partition hash"),
-      (exprs: Seq[Expression]) => XorFoldHash(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((FunctionIdentifier("rolling_hash"),
-      info("rolling_hash", "_FUNC_(value) - Karp-Rabin polynomial fingerprint"),
-      (exprs: Seq[Expression]) => RollingHash(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("word_shingles"),
-      info("word_shingles", "_FUNC_(text, n) - distinct n-word shingles"),
-      (exprs: Seq[Expression]) => WordShingles(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("minhash_sig"),
-      info("minhash_sig", "_FUNC_(shingles, k) - k-element MinHash signature"),
-      (exprs: Seq[Expression]) => MinHashSig(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("simhash64"),
-      info("simhash64", "_FUNC_(tokens) - 64-bit SimHash fingerprint"),
-      (exprs: Seq[Expression]) => SimHash64(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("token_count"),
-      info("token_count", "_FUNC_(text) - whitespace token count"),
-      (exprs: Seq[Expression]) => TokenCount(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("pair_encode"),
-      info("pair_encode", "_FUNC_(ids) - packed unordered id pairs"),
-      (exprs: Seq[Expression]) => PairEncode(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("vec_dot"),
-      info("vec_dot", "_FUNC_(a, b) - float-vector dot product"),
-      (exprs: Seq[Expression]) => VecDot(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("vec_cosine"),
-      info("vec_cosine", "_FUNC_(a, b) - float-vector cosine similarity"),
-      (exprs: Seq[Expression]) => VecCosine(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("hyperplane_sig"),
-      info("hyperplane_sig", "_FUNC_(vec, planes) - hyperplane LSH signature"),
-      (exprs: Seq[Expression]) => HyperplaneSig(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("pq_encode"),
-      info("pq_encode", "_FUNC_(vec, codebook, subspaces) - product-quantization codes"),
-      (exprs: Seq[Expression]) => PqEncode(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((FunctionIdentifier("pq_adc_dot"),
-      info("pq_adc_dot",
-        "_FUNC_(query, codes, codebook, subspaces) - asymmetric PQ inner product"),
-      (exprs: Seq[Expression]) => PqAdcDot(exprs(0), exprs(1), exprs(2), exprs(3))))
-    ext.injectFunction((FunctionIdentifier("misra_gries"),
-      info("misra_gries",
-        "_FUNC_(col, k) - Misra-Gries heavy-hitter candidate aggregate"),
-      (exprs: Seq[Expression]) => MisraGriesAgg(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Int]).toAggregateExpression()))
+    strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
+    rules.foreach(r => ext.injectOptimizerRule(_ => r))
+    functions.foreach(f =>
+      ext.injectFunction((FunctionIdentifier(f.name), info(f), f.build)))
   }
+}
+
+/** Everything graft installs into a session, listed once. */
+object GraftExtensions {
+
+  /** One SQL function: its name, `DESCRIBE FUNCTION` usage and builder. */
+  final case class Fn(name: String, usage: String,
+                      build: Seq[Expression] => Expression)
+
+  private def info(f: Fn) =
+    new ExpressionInfo(classOf[GraftExtensions].getName, null, f.name,
+      f.usage, "", "", "", "", "", "", "built-in")
+
+  /** Physical strategies: the native as-of join, and pointer doubling for
+    * linear recursive CTEs (UnionLoop). */
+  val strategies: Seq[SparkStrategy] =
+    Seq(graft.plans.AsofStrategy, graft.plans.HierarchyDoublingStrategy)
+
+  /** Optimizer rules: the composed union+window as-of idiom ->
+    * AsofJoinPlan, and the linear-additive recursive CTE -> doubling. */
+  val rules: Seq[Rule[LogicalPlan]] =
+    Seq(graft.plans.AsofRewrite, graft.plans.RecursionDoubling)
+
+  val functions: Seq[Fn] = Seq(
+    Fn("csv_column_at",
+      "_FUNC_(line, idx[, delim]) - raw CSV-family field slice (reference dialect)",
+      e => if (e.size >= 3) CsvColumnAt(e(0), e(1), delimOf(e(2), "csv_column_at"))
+           else CsvColumnAt(e(0), e(1))),
+    Fn("csv_field_count",
+      "_FUNC_(line[, delim]) - field count under the reference dialect",
+      e => if (e.size >= 2) CsvFieldCount(e.head, delimOf(e(1), "csv_field_count"))
+           else CsvFieldCount(e.head)),
+    Fn("xor_fold_hash", "_FUNC_(value, seed, n) - reference partition hash",
+      e => XorFoldHash(e(0), e(1), e(2))),
+    Fn("rolling_hash", "_FUNC_(value) - Karp-Rabin polynomial fingerprint",
+      e => RollingHash(e.head)),
+    Fn("word_shingles", "_FUNC_(text, n) - distinct n-word shingles",
+      e => WordShingles(e(0), e(1))),
+    Fn("minhash_sig", "_FUNC_(shingles, k) - k-element MinHash signature",
+      e => MinHashSig(e(0), e(1))),
+    Fn("simhash64", "_FUNC_(tokens) - 64-bit SimHash fingerprint",
+      e => SimHash64(e.head)),
+    Fn("token_count", "_FUNC_(text) - whitespace token count",
+      e => TokenCount(e.head)),
+    Fn("pair_encode", "_FUNC_(ids) - packed unordered id pairs",
+      e => PairEncode(e.head)),
+    Fn("vec_dot", "_FUNC_(a, b) - float-vector dot product",
+      e => VecDot(e(0), e(1))),
+    Fn("vec_cosine", "_FUNC_(a, b) - float-vector cosine similarity",
+      e => VecCosine(e(0), e(1))),
+    Fn("hyperplane_sig", "_FUNC_(vec, planes) - hyperplane LSH signature",
+      e => HyperplaneSig(e(0), e(1))),
+    Fn("pq_encode",
+      "_FUNC_(vec, codebook, subspaces) - product-quantization codes",
+      e => PqEncode(e(0), e(1), e(2))),
+    Fn("pq_adc_dot",
+      "_FUNC_(query, codes, codebook, subspaces) - asymmetric PQ inner product",
+      e => PqAdcDot(e(0), e(1), e(2), e(3))),
+    // aggregate: k must be a literal int
+    Fn("misra_gries",
+      "_FUNC_(col, k) - Misra-Gries heavy-hitter candidate aggregate",
+      e => MisraGriesAgg(e.head, e(1).eval(null).asInstanceOf[Int])
+        .toAggregateExpression()))
 }

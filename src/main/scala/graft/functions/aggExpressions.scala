@@ -123,7 +123,8 @@ case class MisraGriesAgg(
   * the k rows as an ascending-sorted array.
   *
   * Positioning vs the `row_number() <= k` window idiom — measured, not
-  * assumed (tools/TopKScale): Spark 4's own `WindowGroupLimit` rewrite
+  * assumed (by TopKScale, historical (probe removed after 8bdcef0)):
+  * Spark 4's own `WindowGroupLimit` rewrite
   * already bounds that idiom map-side (k rows per group per partition
   * cross the exchange), so there is NO asymptotic shuffle win here. The
   * heap's measured regime is LOW group cardinality / hot groups — per

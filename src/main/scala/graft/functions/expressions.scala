@@ -186,52 +186,13 @@ object GraftFunctions {
 
   /** Register every graft kernel for SQL use: the CSV/hash parity
     * expressions plus the sketch and vector kernels — `spark.sql` users
-    * get the same codegen'd operators the DataFrame API wraps.
+    * get the same codegen'd operators the DataFrame API wraps. The
+    * planner hooks ride along (`AsofJoin.register`). Idempotent.
     */
   def register(spark: SparkSession): Unit = {
-    // the native as-of operator surface rides along: physical strategy +
-    // the composed-idiom optimizer rewrite
     graft.plans.AsofJoin.register(spark)
     val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction(
-      "csv_column_at", exprs =>
-        if (exprs.size >= 3)
-          CsvColumnAt(exprs(0), exprs(1), delimOf(exprs(2), "csv_column_at"))
-        else CsvColumnAt(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "csv_field_count", exprs =>
-        if (exprs.size >= 2)
-          CsvFieldCount(exprs.head, delimOf(exprs(1), "csv_field_count"))
-        else CsvFieldCount(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction(
-      "xor_fold_hash", exprs => XorFoldHash(exprs(0), exprs(1), exprs(2)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "rolling_hash", exprs => RollingHash(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction(
-      "word_shingles", exprs => WordShingles(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "minhash_sig", exprs => MinHashSig(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction(
-      "token_count", exprs => TokenCount(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction(
-      "pair_encode", exprs => PairEncode(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction(
-      "vec_dot", exprs => VecDot(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "vec_cosine", exprs => VecCosine(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "hyperplane_sig", exprs => HyperplaneSig(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "pq_encode", exprs => PqEncode(exprs(0), exprs(1), exprs(2)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "pq_adc_dot",
-      exprs => PqAdcDot(exprs(0), exprs(1), exprs(2), exprs(3)), "built-in")
-    // aggregate: misra_gries(col, k) — k must be a literal int
-    registry.createOrReplaceTempFunction(
-      "misra_gries", exprs => MisraGriesAgg(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Int]).toAggregateExpression(),
-      "built-in")
+    graft.GraftExtensions.functions.foreach(f =>
+      registry.createOrReplaceTempFunction(f.name, f.build, "built-in"))
   }
 }

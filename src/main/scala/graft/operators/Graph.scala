@@ -61,7 +61,8 @@ object Graph {
     * `checkpointInterval` sets how many iterations run as ONE unrolled
     * DAG before the rank frame is materialized. The default (1: the
     * classic Pregel-style per-superstep materialization) is the
-    * at-scale winner — measured at 10-30 M edges (tools/GraphScale) the
+    * at-scale winner — measured at 10-30 M edges
+    * (GraphScale, historical (probe removed after 8bdcef0)) the
     * eager form runs ~3× faster than a 3-round unrolled plan, because a
     * materialized node-sized rank gives each round a shallow plan AQE
     * can size correctly, where the unrolled DAG re-plans every round's
@@ -1177,7 +1178,8 @@ object Graph {
     // can only originate from a node whose OWN label improved last round,
     // so each round joins just the changed frontier against the edges —
     // per-round cost O(frontier out-edges), not O(E). Measured at 100 M
-    // directed / 200 M propagation edges (tools/GraphScale100, local[32]):
+    // directed / 200 M propagation edges on local[32]
+    // (GraphScale100, historical (probe removed after 8bdcef0)):
     // the full-relabel form (every round rejoins every edge) ran 428 s;
     // this delta form's frontier collapses geometrically after round 1.
     var frontier = labels

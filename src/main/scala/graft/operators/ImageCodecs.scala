@@ -198,9 +198,10 @@ object ImageCodecs {
     pngBytesFor(id, w, h, pngColorType(id), pngBitDepth(id))
   }
 
-  /** Parameterized writer behind [[pngOf]] — the scale probe
-    * (tools/ImageScale) uses realistic dimensions the fixture arithmetic
-    * never produces; ancillary-chunk content stays id-derived.
+  /** Parameterized writer behind [[pngOf]] — specs use dimensions the
+    * fixture arithmetic never produces (so did the realistic-size
+    * ImageScale probe, historical (probe removed after 8bdcef0));
+    * ancillary-chunk content stays id-derived.
     */
   private[graft] def pngBytesFor(id: Long, w: Int, h: Int, ct: Int,
                                  bd: Int,

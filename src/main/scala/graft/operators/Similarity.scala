@@ -116,7 +116,8 @@ object Similarity {
     * `assert_true`, so it costs nothing beyond the broadcast build the
     * call already pays — an eager `query.count()` would force a
     * near-full corpus scan when the query is a 1-row filter over a
-    * large table (every real call site: x74, AnnScale, the CLI).
+    * large table (x74 and the CLI; also
+    * AnnScale, historical (probe removed after 8bdcef0)).
     * The partition key `pmod(xxhash64(col), 1)` is 0 for EVERY row
     * (still one global partition — a per-row-varying key would split a
     * multi-row frame into count-1 partitions and defeat the assert)
@@ -212,7 +213,8 @@ object Similarity {
     *    against the cluster's earliest repCap representatives (the
     *    keep-lowest-id survivors by construction); what the cap drops
     *    is only dup-pairs BOTH past the window — measured in
-    *    tools/AnnScale + SCALE.md. The rank itself is one
+    *    SCALE.md (by AnnScale, historical (probe removed after 8bdcef0)).
+    *    The rank itself is one
     *    (cluster, vec_id) window sort — O(m log m) per cluster,
     *    spillable, no quadratic term.
     * Float path: the established double-of-float left-to-right fold

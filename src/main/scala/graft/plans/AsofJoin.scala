@@ -260,24 +260,19 @@ object AsofJoin {
       s"asof join: key ${l.name} must be integral-backed or string, got ${l.dataType}")
   }
 
+  /** Install graft's planner strategies and optimizer rules
+    * (`GraftExtensions.strategies`/`rules`: the as-of operator, its
+    * composed-idiom rewrite, and recursive-CTE pointer doubling) on this
+    * session. Idempotent: a hook already present is not added again.
+    */
   def register(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(AsofStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsofStrategy
-    // the composed-idiom rewrite rides along: any session with the native
-    // operator also gets the pattern upgrade (toggle:
-    // spark.graft.asofRewrite.enabled)
-    if (!spark.experimental.extraOptimizations.contains(AsofRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ AsofRewrite
-    // linear recursive CTEs -> pointer doubling (toggle:
-    // spark.graft.recursionDoubling.enabled)
-    if (!spark.experimental.extraStrategies.contains(HierarchyDoublingStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ HierarchyDoublingStrategy
-    if (!spark.experimental.extraOptimizations.contains(RecursionDoubling))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RecursionDoubling
+    val exp = spark.experimental
+    graft.GraftExtensions.strategies.foreach(s =>
+      if (!exp.extraStrategies.contains(s))
+        exp.extraStrategies = exp.extraStrategies :+ s)
+    graft.GraftExtensions.rules.foreach(r =>
+      if (!exp.extraOptimizations.contains(r))
+        exp.extraOptimizations = exp.extraOptimizations :+ r)
   }
 
   /** Left as-of join: for each left row, the latest right row of the same

@@ -23,7 +23,8 @@ import org.apache.spark.sql.graft.Shims
   * it retains every level's shuffle files. Pointer doubling resolves
   * the same forest in ceil(log2 depth) self-joins — measured 119.9×
   * (13.8 s vs 1659.6 s on a 5000-deep × 200-wide chain,
-  * `tools/RecursionScale`, SCALE.md) — because round k covers 2^k hops.
+  * SCALE.md; RecursionScale, historical (probe removed after 8bdcef0)) —
+  * because round k covers 2^k hops.
   *
   * Matched shape (all conditions REQUIRED; anything else leaves the
   * plan untouched — the rule can only upgrade, never break):
@@ -72,7 +73,8 @@ import org.apache.spark.sql.graft.Shims
   *     computes depth cheaply and checks it after the fact).
   *
   * Disable with `spark.graft.recursionDoubling.enabled=false` (specs
-  * measuring the UnionLoop form itself, and RecursionScale's cte arm).
+  * measuring the UnionLoop form itself; so did the cte arm of
+  * RecursionScale, historical (probe removed after 8bdcef0)).
   */
 object RecursionDoubling extends Rule[LogicalPlan] {
 

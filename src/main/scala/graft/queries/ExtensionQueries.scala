@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   *     index, x4 embedding LSH) are exact values (Jaccard / cosine), so
   *     the oracle is the brute-force all-pairs computation (quadratic,
   *     fine at the sf0.01 gate scale); gate parameters are chosen for
-  *     full empirical recall (RecallProbe) so the oracle doubles as a
+  *     full empirical recall (measured by
+  *     RecallProbe, historical (probe removed after 8bdcef0)) so the oracle doubles as a
   *     recall TRIPWIRE — a sketch regression fails the gate loudly.
   *   - top-k ANN (x5 LSH, x9 IVF) gate against exact brute-force top-k.
   *   - sketch values (x8 HLL/quantile) gate as within-tolerance booleans.
@@ -146,7 +147,8 @@ object ExtensionQueries {
     // SimHash candidates -> exact-Jaccard verification (the candidate→verify
     // discipline; precision exact, sketch tunes only completeness). 8 bands
     // of 8 bits guarantee recall for Hamming <= 7 (pigeonhole); the
-    // fixture's jaccard>=0.5 pairs all sit at Hamming <= 5 (X2Probe), so
+    // fixture's jaccard>=0.5 pairs all sit at Hamming <= 5
+    // (X2Probe, historical (probe removed after 8bdcef0)), so
     // recall is total with margin. The bucket cap (64, family default)
     // drops only hot boilerplate-signature bands — near-dup pairs share
     // >= 3 of 8 bands incl. cold ones (verified: 25/25 at caps 32..128;
@@ -188,7 +190,8 @@ object ExtensionQueries {
     // cosine — precision exact). Runs the PRODUCTION defaults (16 planes,
     // 8 two-bit bands, bucket cap 256): with independent Rademacher planes
     // the banded LSH has full empirical recall on this fixture
-    // (RecallProbe: 59/59 brute-force pairs found), so the brute-force
+    // (59/59 brute-force pairs found by
+    // RecallProbe, historical (probe removed after 8bdcef0)), so the brute-force
     // oracle doubles as a recall tripwire.
     "x4_embed_neardup" -> QueryDef(
       (s, dir) => Similarity.cosineNearDupPairs(
@@ -217,7 +220,8 @@ object ExtensionQueries {
 
     // LSH approximate top-k vs the same query vector as e2_ann_topk.
     // probes=8 still prunes (~half the corpus at 16 planes) yet has full
-    // recall on this fixture (RecallProbe: identical to brute force); the
+    // recall on this fixture (identical to brute force in
+    // RecallProbe, historical (probe removed after 8bdcef0)); the
     // oracle is the exact brute-force top-k, so an LSH recall regression
     // fails the gate rather than passing silently. Production default
     // stays at the tighter pruning setting (probes=4).
@@ -1103,8 +1107,9 @@ object ExtensionQueries {
     // summation-order-exact at any parallelism — the oracle unrolls the
     // same three rounds in SQL and matches bit-for-bit. The gate bounds
     // the graph to every-10th customer (x46's bounded-fixture
-    // discipline); tools/GraphScale measures the operator at 10-50 M
-    // edges for the SCALE.md row. Scale shape: per-iteration = one
+    // discipline); the SCALE.md row measured the operator at 10-50 M
+    // edges (GraphScale, historical (probe removed after 8bdcef0)). Scale shape:
+    // per-iteration = one
     // src-key join (rank broadcast — node-sized) + one map-side-combined
     // dst-key agg; the degree-annotated edge list caches once.
     "x47_pagerank" -> QueryDef(
@@ -1119,7 +1124,8 @@ object ExtensionQueries {
           .distinct()
         // bidirect via a 2-element array explode: ONE pass over cp (the
         // swapped-unionAll form recomputes the orders⋈lineitem+distinct
-        // pipeline once per branch — measured 2x slower, tools/BidirectProbe)
+        // pipeline once per branch — measured 2x slower by
+        // BidirectProbe, historical (probe removed after 8bdcef0))
         val edges = cp.select(explode(array(
             struct(col("c").as("src"), col("p").as("dst")),
             struct(col("p").as("src"), col("c").as("dst")))).as("e"))
@@ -1627,7 +1633,8 @@ object ExtensionQueries {
           .distinct()
         // bidirect via a 2-element array explode: ONE pass over cp (the
         // swapped-unionAll form recomputes the orders⋈lineitem+distinct
-        // pipeline once per branch — measured 2x slower, tools/BidirectProbe)
+        // pipeline once per branch — measured 2x slower by
+        // BidirectProbe, historical (probe removed after 8bdcef0))
         val edges = cp.select(explode(array(
             struct(col("c").as("src"), col("p").as("dst")),
             struct(col("p").as("src"), col("c").as("dst")))).as("e"))
@@ -2047,7 +2054,8 @@ object ExtensionQueries {
     // (TypedImperativeAggregate) keeps a k-bounded heap per group on
     // ObjectHashAggregate with map-side partials. Spark 4's
     // WindowGroupLimit already map-side-bounds the row_number idiom too
-    // (measured both ways in tools/TopKScale — see the Scaladoc): the
+    // (measured both ways, see the Scaladoc;
+    // TopKScale, historical (probe removed after 8bdcef0)): the
     // heap's regime is FEW groups (O(n log k) vs per-partition sort; 5
     // langs here) and aggregate composition (top-k beside other aggs in
     // one pass, rows returned as an array). The oracle IS the window
@@ -2330,8 +2338,9 @@ object ExtensionQueries {
     // with deg > 64 are dropped from the wedge join (in BOTH engines —
     // a mega-hub's co-occurrence is boilerplate, not similarity
     // evidence, and its C(deg,2) pair fan-out is the whole cliff:
-    // tools/GraphScale100 `linkpred` measures 2.13·10¹¹ uncapped
-    // wedges at 100 M edges — the top hub's fan-out alone is ~1.5·10¹¹
+    // the `linkpred` arm measured 2.13·10¹¹ uncapped wedges at 100 M
+    // edges (GraphScale100, historical (probe removed after 8bdcef0))
+    // — the top hub's fan-out alone is ~1.5·10¹¹
     // — vs 8.34·10⁸ capped, 256× less). Jaccard denominators keep the
     // TRUE degrees — the cap prunes evidence channels, never the
     // degree normalization. At gate scale the cap drops nothing: max

@@ -2485,8 +2485,9 @@ object RelationalQueries {
     // event_type into validity intervals [valid_from, valid_to), open
     // interval = current version. The warehouse-standard change-capture
     // shape: one lag + one running sum + one group-by + one lead. The
-    // whole chain runs on ONE hash exchange (PlanAudit: Exchange(3) on
-    // user_id feeds both ts-ordered windows, and that partitioning also
+    // whole chain runs on ONE hash exchange (Exchange(3) on user_id, per
+    // PlanAudit, historical (probe removed after 8bdcef0), feeds
+    // both ts-ordered windows, and that partitioning also
     // satisfies the coarser (user_id, version) group-by clustering and
     // the lead window — the only other exchange is the presentation
     // orderBy). Timestamps surface as epoch MICROS (integer — the

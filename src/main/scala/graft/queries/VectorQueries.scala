@@ -240,8 +240,9 @@ object VectorQueries {
     // the scan is a codegen'd table lookup per subspace, no shuffle.
     // Both kernels fold in fixed order, so the oracle recomputes the
     // pipeline bit-exactly (codes compare as exact integers).
-    // Retrieval quality (tools/PqRecall, 50 queries, this fixture —
-    // i.i.d.-random dims, PQ's worst case): code-only recall@10 0.25;
+    // Retrieval quality (50 queries, this fixture — i.i.d.-random dims,
+    // PQ's worst case; PqRecall, historical (probe removed after 8bdcef0)): code-only
+    // recall@10 0.25;
     // the production shape (ADC shortlist -> exact re-rank of 10·k)
     // reaches 0.848; int8 (x28) holds 0.986 at only 4x compression.
     "x31_ann_pq" -> QueryDef(
@@ -841,9 +842,10 @@ object VectorQueries {
     // that IS 8, at sf0.1 it is 16, at 1 B vectors ~8 M clusters of
     // ~128) and each vector only pairs against its cluster's 256
     // lowest-id members, so pair volume is ≤ 256·n — linear — even
-    // when skew piles everything into one mega-cluster. The 1 M-vector
-    // probe (tools/AnnScale semdedup) measures capped vs uncapped pair
-    // volume; SCALE.md has the counterfactual.
+    // when skew piles everything into one mega-cluster. A 1 M-vector
+    // probe measured capped vs uncapped pair volume
+    // (AnnScale semdedup, historical (probe removed after 8bdcef0)); SCALE.md
+    // has the counterfactual.
     "x87_semantic_dedup" -> QueryDef(
       (s, dir) => {
         graft.operators.Similarity

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe (r21): PAIRED A/B of runtime SQL confs on this box's noisy
   * co-tenancy. For each query, alternates arm A and arm B in one JVM
   * (A B A B A B), so both arms sample the same contention weather;
@@ -14,22 +12,13 @@ import org.apache.spark.sql.SparkSession
 object AbProf {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val sep = args.indexOf("--")
     require(sep > 0, "usage: AbProf k=v[,k=v...] -- query...")
     val confs = args(0).split(",").map { kv =>
       val Array(k, v) = kv.split("=", 2); (k, v)
     }.toSeq
     val names = args.drop(sep + 1).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    val spark = graft.GraftSession(32)
     // custom (spark.graft.*) keys have no registered default — treat
     // "absent" as the default and revert by unsetting
     val defaults = confs.map { case (k, _) =>

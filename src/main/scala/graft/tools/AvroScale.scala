@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Pressure-bound probe for the streaming Avro OCF walk (the WarcScale
@@ -69,10 +68,7 @@ object AvroScale {
     })
     sampler.setDaemon(true); sampler.start()
 
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     val t0 = System.nanoTime()
     val agg = graft.sources.AvroContainer

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measured counterfactual for the CDX random-access arm (x119):
@@ -66,10 +65,7 @@ object CdxScale {
     println(f"archive: $records records, ${archiveBytes / 1e9}%.2f GB on disk; " +
       f"-Xmx=${Runtime.getRuntime.maxMemory() / 1e9}%.2f GB")
 
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession(4)
     spark.sparkContext.setLogLevel("ERROR")
 
     // (a) the full walk: every record decoded + extracted

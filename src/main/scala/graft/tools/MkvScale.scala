@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale probe behind the x102/x103 Matroska rows: throughput of the
@@ -89,10 +89,7 @@ object MkvScale {
     })
     sampler.setDaemon(true); sampler.start()
 
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     val t0 = System.nanoTime()
     val agg = graft.sources.MkvSource
@@ -114,11 +111,7 @@ object MkvScale {
     val clusters = args.drop(1).headOption.map(_.toInt).getOrElse(60)
     val blocks = args.drop(2).headOption.map(_.toInt).getOrElse(30)
     val frameKB = args.drop(3).headOption.map(_.toInt).getOrElse(4)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .getOrCreate()
+    val spark = graft.GraftSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import graft.sources.MkvSource

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale probe behind the WARC ingestion path (x100/x101): throughput of
@@ -84,10 +84,7 @@ object WarcScale {
     })
     sampler.setDaemon(true); sampler.start()
 
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     val t0 = System.nanoTime()
     val agg = graft.sources.WarcSource
@@ -106,11 +103,7 @@ object WarcScale {
     val n = args.headOption.map(_.toLong).getOrElse(20000L)
     val recs = args.drop(1).headOption.map(_.toInt).getOrElse(12)
     val bodyKB = args.drop(2).headOption.map(_.toInt).getOrElse(24)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .getOrCreate()
+    val spark = graft.GraftSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Pressure-bound probe for the ZIP walker (x110): the directory-first
@@ -126,10 +125,7 @@ object ZipScale {
     })
     sampler.setDaemon(true); sampler.start()
 
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     val t0 = System.nanoTime()
     val agg = graft.sources.ZipSource

@@ -65,4 +65,16 @@ object Shims {
       ext: org.apache.spark.sql.SparkSessionExtensions,
       registry: org.apache.spark.sql.catalyst.analysis.FunctionRegistry): Unit =
     ext.registerFunctions(registry)
+
+  /** The planner strategies and optimizer rules a SparkSessionExtensions
+    * would install on `spark` (the `build*` methods are private[sql]) —
+    * lets tests compare the injection path with the programmatic one.
+    */
+  def extensionHooks(
+      ext: org.apache.spark.sql.SparkSessionExtensions,
+      spark: org.apache.spark.sql.SparkSession)
+      : (Seq[org.apache.spark.sql.execution.SparkStrategy],
+         Seq[org.apache.spark.sql.catalyst.rules.Rule[
+           org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]]) =
+    (ext.buildPlannerStrategies(spark), ext.buildOptimizerRules(spark))
 }

@@ -1,13 +1,16 @@
 package graft
 
+import graft.plans.{AsofRewrite, AsofStrategy, HierarchyDoublingStrategy, RecursionDoubling}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.graft.Shims
 
 /** The spark.sql.extensions injection path: GraftExtensions registers every
   * custom function on a fresh registry (what session construction does with
-  * `--conf spark.sql.extensions=graft.GraftExtensions`), and the functions
-  * evaluate correctly through SQL.
+  * `--conf spark.sql.extensions=graft.GraftExtensions`), installs the same
+  * functions and planner hooks as `GraftFunctions.register`, and the
+  * functions evaluate correctly through SQL.
   */
 class ExtensionsSpec extends GraftSparkSpec {
 
@@ -24,6 +27,43 @@ class ExtensionsSpec extends GraftSparkSpec {
     Shims.applyExtensionFunctions(ext, registry)
     allFns.foreach(f =>
       assert(registry.functionExists(FunctionIdentifier(f)), f))
+  }
+
+  private def graftNames(registry: FunctionRegistry): Set[String] =
+    registry.listFunction().map(_.funcName).toSet --
+      FunctionRegistry.builtin.listFunction().map(_.funcName)
+
+  // hand-written like allFns: the independent check on the shared table
+  private val allStrategies = Set[Any](AsofStrategy, HierarchyDoublingStrategy)
+  private val allRules = Set[Any](AsofRewrite, RecursionDoubling)
+
+  test("extensions and register() install the same functions and hooks") {
+    val ext = new SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    val extRegistry = FunctionRegistry.builtin.clone()
+    Shims.applyExtensionFunctions(ext, extRegistry)
+    val (extStrategies, extRules) = Shims.extensionHooks(ext, spark)
+
+    val fresh = spark.newSession()
+    assert(graftNames(fresh.sessionState.functionRegistry).isEmpty)
+    graft.functions.GraftFunctions.register(fresh)
+
+    assert(graftNames(extRegistry) == allFns.toSet)
+    assert(graftNames(fresh.sessionState.functionRegistry) == allFns.toSet)
+    assert(extStrategies.toSet[Any] == allStrategies && extStrategies.size == 2)
+    assert(extRules.toSet[Any] == allRules && extRules.size == 2)
+    assert(fresh.experimental.extraStrategies.toSet[Any] == allStrategies)
+    assert(fresh.experimental.extraOptimizations.toSet[Any] == allRules)
+  }
+
+  test("register() twice leaves each hook installed exactly once") {
+    val fresh = spark.newSession()
+    graft.functions.GraftFunctions.register(fresh)
+    graft.functions.GraftFunctions.register(fresh)
+    val exp = fresh.experimental
+    allStrategies.foreach(s => assert(exp.extraStrategies.count(_ == s) == 1, s))
+    allRules.foreach(r => assert(exp.extraOptimizations.count(_ == r) == 1, r))
+    assert(graftNames(fresh.sessionState.functionRegistry) == allFns.toSet)
   }
 
   test("custom functions evaluate through SQL") {
