@@ -13,8 +13,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession(32)
-    val cpus = spark.conf.get("spark.sql.shuffle.partitions")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession(cpus)
 
     def runOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Either[Throwable, Double] = {
@@ -52,7 +52,7 @@ object Bench {
       import org.apache.spark.sql.functions.expr
       val t0 = System.nanoTime()
       // bit_xor fold: overflow-free under ANSI where sum(xxhash64) throws
-      spark.range(0L, 400000000L, 1L, cpus.toInt)
+      spark.range(0L, 400000000L, 1L, cpus)
         .select(expr("bit_xor(xxhash64(id))"))
         .write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
@@ -119,7 +119,7 @@ object Bench {
     def calibSample(): Double = {
       import org.apache.spark.sql.functions.expr
       val t0 = System.nanoTime()
-      spark.range(0L, 100000000L, 1L, cpus.toInt)
+      spark.range(0L, 100000000L, 1L, cpus)
         .select(expr("bit_xor(xxhash64(id))"))
         .write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9 * 4.0

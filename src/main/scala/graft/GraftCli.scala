@@ -37,7 +37,8 @@ object GraftCli {
   }
 
   def session(): SparkSession = {
-    val s = GraftSession(8, { b =>
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val s = GraftSession(cpus, { b =>
       sys.env.get("SPARK_GRAFT_MASTER").foreach(b.master)
       schedulerPool.foreach(_ => b.config("spark.scheduler.mode", "FAIR"))
       b.appName("graft")

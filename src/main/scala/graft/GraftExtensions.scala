@@ -2,7 +2,7 @@ package graft
 
 import graft.functions.{CsvColumnAt, CsvFieldCount, HyperplaneSig, MinHashSig, MisraGriesAgg, PairEncode, PqAdcDot, PqEncode, RollingHash, SimHash64, TokenCount, VecCosine, VecDot, WordShingles, XorFoldHash}
 import graft.functions.GraftFunctions.delimOf
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -12,8 +12,8 @@ import org.apache.spark.sql.execution.SparkStrategy
 /** Catalyst injection point: register the graft expressions on every session
   * via `--conf spark.sql.extensions=graft.GraftExtensions` — the idiomatic
   * cluster deployment (no driver-side register() call needed; executors and
-  * Thrift/Connect sessions all see the functions). `GraftFunctions.register`
-  * remains the programmatic equivalent for embedded use; both walk the one
+  * Thrift/Connect sessions all see the functions). `GraftExtensions.install`
+  * is the programmatic equivalent for a running session; both walk the one
   * table in the companion object.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -29,6 +29,24 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 /** Everything graft installs into a session, listed once. */
 object GraftExtensions {
+
+  /** Install every strategy, rule and function of the table on a running
+    * session. Idempotent: a hook already present is not added again, and a
+    * function already bound to its builder here is not re-bound.
+    */
+  def install(spark: SparkSession): Unit = {
+    val exp = spark.experimental
+    strategies.foreach(s =>
+      if (!exp.extraStrategies.contains(s))
+        exp.extraStrategies = exp.extraStrategies :+ s)
+    rules.foreach(r =>
+      if (!exp.extraOptimizations.contains(r))
+        exp.extraOptimizations = exp.extraOptimizations :+ r)
+    val registry = spark.sessionState.functionRegistry
+    functions.foreach(f =>
+      if (!registry.lookupFunctionBuilder(FunctionIdentifier(f.name)).contains(f.build))
+        registry.createOrReplaceTempFunction(f.name, f.build, "built-in"))
+  }
 
   /** One SQL function: its name, `DESCRIBE FUNCTION` usage and builder. */
   final case class Fn(name: String, usage: String,

@@ -5,24 +5,22 @@ import org.apache.spark.sql.SparkSession
 /** The one place graft builds a SparkSession: `local[cpus]` with
   * shuffle partitions = cpus, UTC session time zone, AQE on, no UI, WARN
   * logging, and every graft function and planner hook installed
-  * (`GraftFunctions.register`). `cpus` comes from `SPARK_GRAFT_CPUS`,
-  * else the caller's default. `configure` runs last on the builder, so a
-  * caller can override the master or add confs of its own.
+  * (`GraftExtensions.install`). `configure` runs last on the builder, so
+  * a caller can override the master or add confs of its own.
   */
 object GraftSession {
-  def apply(defaultCpus: Int,
+  def apply(cpus: Int,
             configure: SparkSession.Builder => SparkSession.Builder = identity)
       : SparkSession = {
-    val n = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
     val s = configure(SparkSession.builder()
-      .master(s"local[$n]")
-      .config("spark.sql.shuffle.partitions", n)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(s)
+    GraftExtensions.install(s)
     s
   }
 }

@@ -8,7 +8,8 @@ object Verify {
     // the driver always calls with exactly two)
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
-    val spark = GraftSession(4)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession(cpus)
     new java.io.File(outDir).mkdirs()
     // Output dir MUST be the bare query name: the driver's correctness gate
     // keys its report by output-directory name and looks that key up in

@@ -187,12 +187,7 @@ object GraftFunctions {
   /** Register every graft kernel for SQL use: the CSV/hash parity
     * expressions plus the sketch and vector kernels — `spark.sql` users
     * get the same codegen'd operators the DataFrame API wraps. The
-    * planner hooks ride along (`AsofJoin.register`). Idempotent.
+    * planner hooks ride along (`GraftExtensions.install`). Idempotent.
     */
-  def register(spark: SparkSession): Unit = {
-    graft.plans.AsofJoin.register(spark)
-    val registry = spark.sessionState.functionRegistry
-    graft.GraftExtensions.functions.foreach(f =>
-      registry.createOrReplaceTempFunction(f.name, f.build, "built-in"))
-  }
+  def register(spark: SparkSession): Unit = graft.GraftExtensions.install(spark)
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -260,21 +260,6 @@ object AsofJoin {
       s"asof join: key ${l.name} must be integral-backed or string, got ${l.dataType}")
   }
 
-  /** Install graft's planner strategies and optimizer rules
-    * (`GraftExtensions.strategies`/`rules`: the as-of operator, its
-    * composed-idiom rewrite, and recursive-CTE pointer doubling) on this
-    * session. Idempotent: a hook already present is not added again.
-    */
-  def register(spark: SparkSession): Unit = {
-    val exp = spark.experimental
-    graft.GraftExtensions.strategies.foreach(s =>
-      if (!exp.extraStrategies.contains(s))
-        exp.extraStrategies = exp.extraStrategies :+ s)
-    graft.GraftExtensions.rules.foreach(r =>
-      if (!exp.extraOptimizations.contains(r))
-        exp.extraOptimizations = exp.extraOptimizations :+ r)
-  }
-
   /** Left as-of join: for each left row, the latest right row of the same
     * `key` with `right.time <= left.time` (nulls when none). `valueCols`
     * are the right columns carried into the output.
@@ -297,7 +282,7 @@ object AsofJoin {
     require(Seq("backward", "forward", "nearest").contains(direction),
       s"asof join: direction must be backward|forward|nearest, got '$direction'")
     val spark = leftDf.sparkSession
-    register(spark)
+    graft.GraftExtensions.install(spark)
     val lp = leftDf.queryExecution.analyzed
     val rp = rightDf.queryExecution.analyzed
     def att(plan: LogicalPlan, name: String): Attribute =

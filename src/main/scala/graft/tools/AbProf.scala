@@ -18,7 +18,8 @@ object AbProf {
       val Array(k, v) = kv.split("=", 2); (k, v)
     }.toSeq
     val names = args.drop(sep + 1).toSeq
-    val spark = graft.GraftSession(32)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.GraftSession(cpus)
     // custom (spark.graft.*) keys have no registered default — treat
     // "absent" as the default and revert by unsetting
     val defaults = confs.map { case (k, _) =>

@@ -14,8 +14,8 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 object JobProf {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = graft.GraftSession(32)
-    val cpus = spark.conf.get("spark.sql.shuffle.partitions")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.GraftSession(cpus)
 
     val jobs = new AtomicInteger
     val stages = new AtomicInteger
@@ -58,7 +58,7 @@ object JobProf {
       val tms = taskMs.get / 1000.0
       println(f"[jobprof] $name%-28s wall=$wall%7.2fs jobs=${jobs.get}%4d " +
         f"stages=${stages.get}%4d tasks=${tasks.get}%6d " +
-        f"taskSum=$tms%8.2fs taskSum/cores=${tms / cpus.toInt}%6.2fs " +
+        f"taskSum=$tms%8.2fs taskSum/cores=${tms / cpus}%6.2fs " +
         f"gc=${gcMs.get / 1000.0}%5.2fs deser=${deserMs.get / 1000.0}%6.2fs " +
         f"fetchWait=${shuffleFetchMs.get / 1000.0}%5.2fs")
       spark.sparkContext.getPersistentRDDs.values

@@ -2,7 +2,6 @@ package graft
 
 import graft.plans.{AsofRewrite, AsofStrategy, HierarchyDoublingStrategy, RecursionDoubling}
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.graft.Shims
 
@@ -19,19 +18,17 @@ class ExtensionsSpec extends GraftSparkSpec {
     "simhash64", "token_count", "pair_encode", "vec_dot", "vec_cosine",
     "hyperplane_sig", "misra_gries", "pq_encode", "pq_adc_dot")
 
-  test("GraftExtensions registers all custom functions") {
-    val ext = new SparkSessionExtensions
-    new GraftExtensions().apply(ext)
-    val registry = spark.sessionState.functionRegistry.clone()
-    allFns.foreach(f => registry.dropFunction(FunctionIdentifier(f)))
-    Shims.applyExtensionFunctions(ext, registry)
-    allFns.foreach(f =>
-      assert(registry.functionExists(FunctionIdentifier(f)), f))
-  }
-
   private def graftNames(registry: FunctionRegistry): Set[String] =
     registry.listFunction().map(_.funcName).toSet --
       FunctionRegistry.builtin.listFunction().map(_.funcName)
+
+  test("GraftExtensions registers all custom functions") {
+    val ext = new SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    val registry = FunctionRegistry.builtin.clone()
+    Shims.applyExtensionFunctions(ext, registry)
+    assert(graftNames(registry) == allFns.toSet)
+  }
 
   // hand-written like allFns: the independent check on the shared table
   private val allStrategies = Set[Any](AsofStrategy, HierarchyDoublingStrategy)
@@ -40,18 +37,14 @@ class ExtensionsSpec extends GraftSparkSpec {
   test("extensions and register() install the same functions and hooks") {
     val ext = new SparkSessionExtensions
     new GraftExtensions().apply(ext)
-    val extRegistry = FunctionRegistry.builtin.clone()
-    Shims.applyExtensionFunctions(ext, extRegistry)
     val (extStrategies, extRules) = Shims.extensionHooks(ext, spark)
+    assert(extStrategies.toSet[Any] == allStrategies && extStrategies.size == 2)
+    assert(extRules.toSet[Any] == allRules && extRules.size == 2)
 
     val fresh = spark.newSession()
     assert(graftNames(fresh.sessionState.functionRegistry).isEmpty)
     graft.functions.GraftFunctions.register(fresh)
-
-    assert(graftNames(extRegistry) == allFns.toSet)
     assert(graftNames(fresh.sessionState.functionRegistry) == allFns.toSet)
-    assert(extStrategies.toSet[Any] == allStrategies && extStrategies.size == 2)
-    assert(extRules.toSet[Any] == allRules && extRules.size == 2)
     assert(fresh.experimental.extraStrategies.toSet[Any] == allStrategies)
     assert(fresh.experimental.extraOptimizations.toSet[Any] == allRules)
   }
